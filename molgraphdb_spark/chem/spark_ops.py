@@ -33,9 +33,13 @@ from pyspark.sql import functions as F
 from molgraphdb_spark.chem.edits import all_single_edits
 from molgraphdb_spark.chem.mol import parse_smiles, mol_key, SmilesError
 from molgraphdb_spark.chem.subgraphs import enumerate_subgraphs
-from molgraphdb_spark.functions.literals import literal_df
+from molgraphdb_spark.functions.literals import local_df
 
 EDGE_COLS = "src string, src_smiles string, dst string, diff_atom int, diff_bond int, subs int"
+#: expand_relations' outputs: edges unique per ordered (src, dst), and
+#: one representative SMILES per WL id.
+REL_COLS = "src string, dst string, diff_atom int, diff_bond int, subs int"
+VERT_COLS = "mol_id string, smiles string"
 SUBGRAPH_COLS = (
     "parent string, subgraph_hash string, size int, n_edges int, "
     "adjacency array<array<int>>, elements array<string>"
@@ -62,9 +66,9 @@ def parse_molecules(spark: SparkSession, smiles: list[str]) -> DataFrame:
                 rows, columns=["smiles", "mol_id", "n_atoms", "n_bonds", "valid", "reason"]
             )
 
-    # literal_df, not createDataFrame: a parallelized local collection
-    # adds a Python pickle stage to EVERY downstream job (~2-4 s each).
-    return literal_df(spark, [(s,) for s in smiles], ["smiles"]).mapInPandas(
+    # local_df, not createDataFrame(list): the pickled collection would
+    # add a Python-runner stage to every downstream job
+    return local_df(spark, [(s,) for s in smiles], "smiles string").mapInPandas(
         gen, schema=MOL_COLS
     )
 
@@ -101,7 +105,11 @@ def expand_wave(frontier: DataFrame) -> DataFrame:
 #: ~5.7 s of bench wall on 2 Spark jobs per wave (mapInPandas stage +
 #: tagged-union novelty materialization) — the r14 verdict's suspected
 #: "kernel cost" was actually fixed per-job overhead (the query runs
-#: FASTER on 8 cores than 32). Same dispatch philosophy as
+#: FASTER on 8 cores than 32). The driver path hands its result to
+#: the JVM as two :func:`local_df` frames: ~0.02 s fixed plus ~5 µs per
+#: edge on a 4-core host (the benchmark's mid expansion, 724 edges, in
+#: 0.02-0.04 s), so even the cap's ~33k edges (~8 per molecule) cost
+#: 0.17 s, under one wave's job overhead. Same dispatch philosophy as
 #: triangle_count's broadcast bound and connected_components_auto.
 EXPAND_DRIVER_MAX_MOLS = 4096
 
@@ -110,7 +118,7 @@ def _expand_driver(
     seed_smiles: list[str], depth: int, max_mols: int
 ) -> tuple[dict, dict] | None:
     """Driver-side twin of the wave loop below — SAME kernel functions,
-    SAME per-wave semantics (first-wins dedup per ordered (src, dst),
+    SAME per-wave semantics (min-attrs dedup per ordered (src, dst),
     novelty = not-yet-known, identical break conditions). Returns
     (edges, vertices) dicts, or None when the expansion exceeds
     ``max_mols`` processed molecules (caller falls back to the
@@ -134,11 +142,12 @@ def _expand_driver(
                 return None
             mol = parse_smiles(smi)
             for s, s_smiles, o, da, db, subs in all_single_edits(mol, smi):
-                # row-level mirror of the wave loop's dropDuplicates +
-                # anti-join: one edge per ordered pair (first wins), a
-                # vertex is novel when no earlier wave knew it
+                # row-level mirror of the wave loop's min_edge_attrs +
+                # anti-join: one edge per ordered pair (smallest attrs
+                # win), a vertex is novel when no earlier wave knew it
                 if (s, o) not in edges:
-                    new_edges.setdefault((s, o), (da, db, subs))
+                    a = (da, db, subs)
+                    new_edges[s, o] = min(a, new_edges.get((s, o), a))
                 if s not in verts:
                     new_verts.setdefault(s, s_smiles)
         if not new_edges and not new_verts:
@@ -149,6 +158,17 @@ def _expand_driver(
         if not new_verts:
             break
     return edges, verts
+
+
+def min_edge_attrs(edges: DataFrame) -> DataFrame:
+    """One row per ordered (src, dst) with the smallest (diff_atom,
+    diff_bond, subs): the wave loop's deterministic tie-break, the same
+    one the driver path applies row by row."""
+    return (
+        edges.groupBy("src", "dst")
+        .agg(F.min(F.struct("diff_atom", "diff_bond", "subs")).alias("a"))
+        .select("src", "dst", "a.*")
+    )
 
 
 def expand_relations(
@@ -166,37 +186,18 @@ def expand_relations(
     Size-dispatched (r15): seed lists whose whole expansion stays under
     ``driver_max_mols`` processed molecules run the fixed point in the
     driver (:func:`_expand_driver` — same kernel, same semantics,
-    test-pinned equal) and return JVM-literal DataFrames; larger
+    test-pinned equal) and return :func:`local_df` frames; larger
     expansions (or a mid-expansion cap hit) run the distributed wave
     loop below. Pass ``driver_max_mols=0`` to force the wave loop.
     """
-    if len(seed_smiles) <= driver_max_mols:
+    if driver_max_mols and len(seed_smiles) <= driver_max_mols:
         result = _expand_driver(seed_smiles, depth, driver_max_mols)
         if result is not None:
             edges_d, verts_d = result
-            e_schema = "src string, dst string, diff_atom int, diff_bond int, subs int"
-            v_schema = "mol_id string, smiles string"
-            if edges_d:
-                edges_df = literal_df(
-                    spark,
-                    [(s, d, *attrs) for (s, d), attrs in edges_d.items()],
-                    ["src", "dst", "diff_atom", "diff_bond", "subs"],
-                ).select(
-                    F.col("src").cast("string"),
-                    F.col("dst").cast("string"),
-                    F.col("diff_atom").cast("int"),
-                    F.col("diff_bond").cast("int"),
-                    F.col("subs").cast("int"),
-                )
-            else:
-                edges_df = spark.createDataFrame([], e_schema)
-            if verts_d:
-                verts_df = literal_df(
-                    spark, list(verts_d.items()), ["mol_id", "smiles"]
-                ).select(F.col("mol_id").cast("string"), F.col("smiles").cast("string"))
-            else:
-                verts_df = spark.createDataFrame([], v_schema)
-            return edges_df, verts_df
+            return (
+                local_df(spark, [(s, d, *a) for (s, d), a in edges_d.items()], REL_COLS),
+                local_df(spark, list(verts_d.items()), VERT_COLS),
+            )
     # partitioning sized to the seed set: fixture-scale seed lists in
     # one partition; large corpora keep ~8 molecules per partition task
     seeds = (
@@ -211,9 +212,7 @@ def expand_relations(
         .dropDuplicates(["mol_id"])
         .localCheckpoint()
     )
-    edges = spark.createDataFrame(
-        [], "src string, dst string, diff_atom int, diff_bond int, subs int"
-    ).localCheckpoint()
+    edges = local_df(spark, [], REL_COLS)
     frontier = vertices
     # Per-wave job budget (r1 verdict: ~4 blocking jobs/wave was the
     # dominant cost): exactly TWO jobs per wave — (1) materialize the
@@ -226,10 +225,8 @@ def expand_relations(
         # wave is consumed by both delta branches below; checkpoint it
         # so the mapInPandas worker stage runs once, not per-branch.
         wave = expand_wave(frontier).localCheckpoint()
-        new_edges = (
-            wave.select("src", "dst", "diff_atom", "diff_bond", "subs")
-            .dropDuplicates(["src", "dst"])
-            .join(edges.select("src", "dst"), ["src", "dst"], "left_anti")
+        new_edges = min_edge_attrs(wave).join(
+            edges.select("src", "dst"), ["src", "dst"], "left_anti"
         )
         # novel molecules: sources of new edges not yet known (J4,
         # add_and_return_new main.py:262–270)
@@ -336,7 +333,7 @@ def named_molecule_subgraphs(spark: SparkSession, named: list[tuple[str, str]]) 
             )
 
     return (
-        literal_df(spark, named, ["name", "smiles"])
+        local_df(spark, named, "name string, smiles string")
         .coalesce(1)
         .mapInPandas(gen, schema=SUBGRAPH_COLS + ", parent_atoms int")
     )

@@ -1,42 +1,38 @@
-"""JVM-side construction of small literal DataFrames.
+"""Small driver-side DataFrames handed to the JVM in one Arrow batch.
 
-``spark.createDataFrame(local_rows)`` parallelizes a PICKLED Python
-collection: every action on (or downstream of) that DataFrame runs an
-extra Python-runner stage just to deserialize it — measured at ~2-4 s
-per job in local mode, paid on EVERY reuse unless checkpointed. For
-fixture/seed-sized data the fix is to inline the rows as a literal
-array of structs over ``spark.range``: the source is then native JVM,
-costs nothing per job, and participates in whole-stage codegen.
-
-Use for seeds and fixtures (≲ a few hundred rows); beyond that the
-literal expression tree itself gets expensive — write a parquet fixture
-instead.
+Seeds, fixtures and driver-computed results are built as one typed
+``pyarrow.Table`` and passed to ``spark.createDataFrame`` in a single
+serialized hand-off. The plan leaf is a JVM ``LocalRelation``: no
+per-cell py4j calls and no pickled Python collection, so no
+Python-runner stage in any downstream job. Measured on a 4-core host:
+724 five-column edge rows build in 0.02-0.04 s (8.0-8.3 s as a
+``F.lit``/``F.struct`` expression tree), 33,000 rows in 0.17 s. The
+rows live in the plan, so keep this to driver-sized data; anything
+that grows with the corpus is a table.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
-def literal_df(spark: SparkSession, rows: Sequence[tuple], cols: Sequence[str]) -> DataFrame:
-    """Small literal DataFrame, built JVM-side (see module docstring).
-
-    Types come from ``F.lit`` inference per cell (int→int/bigint,
-    str→string, float→double); all rows must be type-consistent.
-    """
-    if not rows:
-        raise ValueError("literal_df needs at least one row; use an explicit schema path")
-    arr = F.array(
-        *[
-            F.struct(*[F.lit(v).alias(c) for v, c in zip(r, cols, strict=True)])
-            for r in rows
-        ]
-    )
-    return (
-        spark.range(len(rows))
-        .select(F.element_at(arr, (F.col("id") + 1).cast("int")).alias("_s"))
-        .select("_s.*")
-    )
+def local_df(
+    spark: SparkSession, rows: Sequence[tuple], schema: str | StructType
+) -> DataFrame:
+    """``rows`` as a DataFrame with exactly ``schema`` (a DDL string or a
+    ``StructType``); an empty ``rows`` gives a typed empty frame. Works
+    whatever ``spark.sql.execution.arrow.pyspark.enabled`` says."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows, strict=True)) if rows else [()] * len(arrow)
+    arrays = [pa.array(c, type=f.type) for c, f in zip(cols, arrow, strict=True)]
+    for a, f in zip(arrays, arrow):
+        if not f.nullable and a.null_count:
+            raise ValueError(f"local_df: null in non-nullable column {f.name!r}")
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)

@@ -35,6 +35,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from molgraphdb_spark.functions.literals import local_df
+
 #: Schema of the molecular-relations edge table (SURVEY.md §1.1;
 #: reference DDL /root/reference/main.py:143–153).
 EDGE_SCHEMA = StructType(
@@ -49,11 +51,11 @@ EDGE_SCHEMA = StructType(
 
 
 def empty_edges(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], EDGE_SCHEMA)
+    return local_df(spark, [], EDGE_SCHEMA)
 
 
 def edges_from_rows(spark: SparkSession, rows: list[tuple]) -> DataFrame:
-    return spark.createDataFrame(rows, EDGE_SCHEMA)
+    return local_df(spark, rows, EDGE_SCHEMA)
 
 
 def append_edges(existing: DataFrame, new: DataFrame) -> DataFrame:

@@ -100,5 +100,8 @@ def plan_summary(df: DataFrame) -> dict:
         "n_broadcast_joins": n_nodes("BroadcastHashJoin"),
         "n_sortmerge_joins": n_nodes("SortMergeJoin"),
         "has_python_worker": "BatchEvalPython" in plan or "ArrowEvalPython" in plan,
+        # a Scan ExistingRDD over a pickled driver-side collection
+        # (createDataFrame(list)): every job re-runs its Python stage
+        "local_rdd": "applySchemaToPythonRDD" in plan,
         "plan": plan,
     }

@@ -29,6 +29,7 @@ from molgraphdb_spark.chem.spark_ops import (
     parse_molecules,
     subgraph_catalog,
 )
+from molgraphdb_spark.functions.literals import local_df
 from molgraphdb_spark.session import tune
 
 #: The GED-pipeline example molecules (mcs.py:700–706).
@@ -42,6 +43,10 @@ EXAMPLES = [
 
 #: Simple edit-graph seeds (main.py:377–380).
 EDIT_SEEDS = ["CCC", "CC", "C(C)C"]
+
+#: Schemas of the fixture frames fed to the mapInPandas kernels.
+_NAMED_COLS = "name string, smiles string"
+_PAIR_COLS = "na string, sa string, nb string, sb string"
 
 
 def _example_mols(spark: SparkSession) -> DataFrame:
@@ -131,11 +136,10 @@ def chem_substructure_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation is the stored populate_database output and the screen
     stays one map-side hash join."""
     from molgraphdb_spark.chem.mol import mol_key, parse_smiles
-    from molgraphdb_spark.functions.literals import literal_df
 
     sg = _fixture_subgraphs(spark)
     qk = [(q, mol_key(parse_smiles(smi))) for q, smi in SUBSTRUCTURE_QUERIES]
-    qdf = literal_df(spark, qk, ["query", "qkey"])
+    qdf = local_df(spark, qk, "query string, qkey string")
     return (
         sg.join(F.broadcast(qdf), sg.subgraph_hash == qdf.qkey)
         .select("query", F.col("parent").alias("name"))
@@ -293,8 +297,6 @@ def chem_exact_ged_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
     from itertools import combinations
 
-    from molgraphdb_spark.functions.literals import literal_df
-
     pair_rows = [
         (na, sa, nb, sb) for (na, sa), (nb, sb) in combinations(EXAMPLES, 2)
     ]
@@ -311,7 +313,7 @@ def chem_exact_ged_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=["mol_a", "mol_b", "exact_ged"])
 
     return (
-        literal_df(spark, pair_rows, ["na", "sa", "nb", "sb"])
+        local_df(spark, pair_rows, _PAIR_COLS)
         .coalesce(1)
         .mapInPandas(gen, schema="mol_a string, mol_b string, exact_ged double")
         .orderBy("mol_a", "mol_b")
@@ -362,7 +364,6 @@ def chem_pharma_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
     from molgraphdb_spark.chem.edits import all_single_edits
     from molgraphdb_spark.chem.mol import parse_smiles
-    from molgraphdb_spark.functions.literals import literal_df
 
     def gen(batches):
         for pdf in batches:
@@ -391,7 +392,7 @@ def chem_pharma_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     return (
-        literal_df(spark, PHARMA, ["name", "smiles"])
+        local_df(spark, PHARMA, _NAMED_COLS)
         .coalesce(1)
         .mapInPandas(
             gen,
@@ -441,7 +442,6 @@ def chem_pharma_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
     from molgraphdb_spark.chem.mol import parse_smiles
     from molgraphdb_spark.chem.subgraphs import enumerate_subgraphs, overlap_metrics
-    from molgraphdb_spark.functions.literals import literal_df
 
     pair = [(PHARMA[0][0], PHARMA[0][1], PHARMA[1][0], PHARMA[1][1])]
 
@@ -464,7 +464,7 @@ def chem_pharma_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     return (
-        literal_df(spark, pair, ["na", "sa", "nb", "sb"])
+        local_df(spark, pair, _PAIR_COLS)
         .coalesce(1)
         .mapInPandas(
             gen,
@@ -570,12 +570,8 @@ def chem_render_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     principles)."""
     import pandas as pd
 
-    from molgraphdb_spark.functions.literals import literal_df
-
     tune(spark)
-    mols = literal_df(
-        spark, list(EXAMPLES + PHARMA), ["name", "smiles"]
-    ).coalesce(1)
+    mols = local_df(spark, list(EXAMPLES + PHARMA), _NAMED_COLS).coalesce(1)
 
     def gen(batches):
         from molgraphdb_spark.chem.render import render_ppm

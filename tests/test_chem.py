@@ -277,6 +277,38 @@ def test_expand_relations_driver_dispatch_matches_wave_loop(spark):
     assert {tuple(r) for r in e_cap.collect()} == {tuple(r) for r in e_ref.collect()}
 
 
+def test_expand_edge_attr_tie_break_is_min_on_both_paths(spark, monkeypatch):
+    # edits of one molecule colliding on (src, dst) with different
+    # attributes: both expansion paths keep the smallest attr tuple,
+    # whatever order the rows arrive in
+    from molgraphdb_spark.chem import spark_ops
+    from molgraphdb_spark.functions.literals import local_df
+
+    rows = [("k", "N", "o", 2, 1, 1), ("k", "N", "o", 1, 5, 1), ("k", "N", "o", 1, 5, 0)]
+    monkeypatch.setattr(spark_ops, "all_single_edits", lambda mol, smi: iter(rows))
+    edges, _ = spark_ops._expand_driver(["CC"], depth=1, max_mols=10)
+    assert edges == {("k", "o"): (1, 5, 0)}
+    for order in (rows, rows[::-1]):
+        wave = local_df(spark, order, spark_ops.EDGE_COLS).repartition(3)
+        assert [tuple(r) for r in spark_ops.min_edge_attrs(wave).collect()] == [
+            ("k", "o", 1, 5, 0)
+        ]
+
+
+def test_expand_relations_zero_cap_forces_wave_loop(spark, monkeypatch):
+    # driver_max_mols=0 forces the wave loop, also for an empty seed list
+    from molgraphdb_spark.chem import spark_ops
+
+    def no_driver(*_args):
+        raise AssertionError("driver path taken")
+
+    monkeypatch.setattr(spark_ops, "_expand_driver", no_driver)
+    edges, verts = expand_relations(spark, [], driver_max_mols=0)
+    assert edges.columns == ["src", "dst", "diff_atom", "diff_bond", "subs"]
+    assert verts.columns == ["mol_id", "smiles"]
+    assert edges.collect() == [] and verts.collect() == []
+
+
 def test_expand_relations_fixed_point(spark):
     # seeds CCC, CC, C(C)C (main.py:377–380): CCC ≡ C(C)C (same WL id)
     edges, vertices = expand_relations(spark, ["CCC", "CC", "C(C)C"], depth=2)

@@ -902,3 +902,15 @@ def test_assign_cid_statically_non_nullable(spark):
         assert not field.nullable, field
         cids = [r["cid"] for r in out.orderBy("id").collect()]
         assert cids == [0, 1, 0], cids  # tie at row 2 breaks to lowest cid
+
+
+def test_plan_summary_flags_pickled_local_collections(spark):
+    # local_rdd marks a Scan ExistingRDD over createDataFrame(list);
+    # local_df frames and checkpointed RDD scans are not flagged
+    from molgraphdb_spark.functions.literals import local_df
+
+    pickled = spark.createDataFrame([("a", 1)], "s string, n int")
+    assert plan_summary(pickled)["local_rdd"]
+    assert plan_summary(pickled.crossJoin(spark.range(3).localCheckpoint()))["local_rdd"]
+    assert not plan_summary(local_df(spark, [("a", 1)], "s string, n int"))["local_rdd"]
+    assert not plan_summary(pickled.localCheckpoint())["local_rdd"]

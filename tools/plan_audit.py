@@ -1,7 +1,8 @@
 """Plan audit: print the scale-relevant physical-plan facts (pushed
 filters, read schema width, exchange/broadcast/codegen counts, Python
-worker presence) for every bench headline query — the same properties
-tests/test_plans.py asserts, surfaced for human review.
+worker presence, scans of pickled local collections) for every bench
+headline query — the same properties tests/test_plans.py asserts,
+surfaced for human review.
 
     python tools/plan_audit.py [sf_dir] [query ...]
 """
@@ -38,7 +39,7 @@ def main() -> int:
         print(
             f"{name}: scans={s['n_scans']} exchanges={s['n_exchanges']} "
             f"bcast_joins={s['n_broadcast_joins']} smj={s['n_sortmerge_joins']} "
-            f"python_worker={s['has_python_worker']} "
+            f"python_worker={s['has_python_worker']} local_rdd={s['local_rdd']} "
             f"read_cols={len(s['read_columns'])} "
             f"pushed={'yes' if s['pushed_filters'] else 'no'}"
         )
