@@ -27,13 +27,14 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from molgraphdb_spark.chem.edits import all_single_edits
 from molgraphdb_spark.chem.mol import parse_smiles, mol_key, SmilesError
 from molgraphdb_spark.chem.subgraphs import enumerate_subgraphs
 from molgraphdb_spark.functions.literals import local_df
+from molgraphdb_spark.operators.graph import checkpoint_observed
 
 EDGE_COLS = "src string, src_smiles string, dst string, diff_atom int, diff_bond int, subs int"
 #: expand_relations' outputs: edges unique per ordered (src, dst), and
@@ -235,8 +236,7 @@ def expand_relations(
             .dropDuplicates(["mol_id"])
             .join(vertices.select("mol_id"), ["mol_id"], "left_anti")
         )
-        obs = Observation()
-        delta = (
+        delta, got = checkpoint_observed(
             new_edges.select(
                 F.lit("e").alias("tag"), "src", "dst",
                 "diff_atom", "diff_bond", "subs", null_s.alias("smiles"),
@@ -247,16 +247,11 @@ def expand_relations(
                     null_s.alias("dst"), null_i.alias("diff_atom"),
                     null_i.alias("diff_bond"), null_i.alias("subs"), "smiles",
                 )
-            )
-            .observe(
-                obs,
-                F.sum((F.col("tag") == "e").cast("long")).alias("n_edges"),
-                F.sum((F.col("tag") == "v").cast("long")).alias("n_vertices"),
-            )
-            .localCheckpoint()
+            ),
+            n_edges=F.sum((F.col("tag") == "e").cast("long")),
+            n_vertices=F.sum((F.col("tag") == "v").cast("long")),
         )
-        got = obs.get
-        if not got.get("n_edges") and not got.get("n_vertices"):
+        if not got["n_edges"] and not got["n_vertices"]:
             break
         # Lazy unions of checkpointed RDDs: the chain stays shallow (one
         # union node per wave over materialized children), so no eager
@@ -270,7 +265,7 @@ def expand_relations(
             F.col("src").alias("mol_id"), "smiles"
         )
         vertices = vertices.unionByName(frontier)
-        if not got.get("n_vertices"):
+        if not got["n_vertices"]:
             break
     return edges, vertices
 

@@ -26,7 +26,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -89,21 +89,40 @@ def graph_stats(edges: DataFrame) -> dict:
     return {"unique_molecules": row.unique_molecules, "n_edges": row.n_edges}
 
 
-def bfs_distances(
+def checkpoint_observed(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
+    """One round of an iterative operator: observe the named aggregates
+    on ``df`` and localCheckpoint it in the SAME job, then return the
+    checkpoint and the metric values (keyed by name). The round's
+    convergence or emptiness probe thus costs no separate count() job
+    (r1 verdict: a separate probe doubled the job count), and the
+    checkpoint truncates the lineage so the plan stays shallow."""
+    obs = Observation()
+    cut = df.observe(obs, *(c.alias(k) for k, c in metrics.items())).localCheckpoint()
+    return cut, obs.get
+
+
+def multi_bfs_distances(
     edges: DataFrame,
-    source: str | int,
+    seeds: list[str] | list[int],
     max_depth: int = 100,
     target: str | int | None = None,
 ) -> DataFrame:
-    """Per-wave frontier BFS from ``source``; returns (id, dist) for
-    every vertex reached within ``max_depth`` edges (dist = edge count).
+    """The BFS wave loop: BFS from ALL ``seeds`` (string or long ids)
+    at once; returns (seed, id, dist) for every (seed → vertex) pair
+    reached within ``max_depth`` edges (dist = edge count).
 
     Implements the reference's wavefront loop
-    (/root/reference/main.py:283–303): each wave is
-    frontier ⋈ edges on src (J1) followed by a left-anti join against
-    the visited set (J2/P5). Early-exits when ``target`` is reached
-    (main.py:292–293) or the frontier empties.
-    """
+    (/root/reference/main.py:283–303): each wave is frontier ⋈ edges on
+    src (J1) followed by a left-anti join against the visited set
+    (J2/P5). Early-exits when any wave reaches ``target``
+    (main.py:292–293) or every frontier empties.
+
+    The scale point vs running one BFS per seed: K single-source runs
+    pay K× the wave-loop job overhead and scan the edge table K× per
+    depth level; here the frontier is keyed by (seed, id), so ONE join
+    per wave advances every seed's wavefront simultaneously — the
+    standard multi-source BFS batching. :func:`bfs_distances` is its
+    one-seed case."""
     spark = edges.sparkSession
     # Materialize the edge relation ONCE: a derived edge table (e.g. a
     # join+distinct) would otherwise be recomputed from scratch every
@@ -111,16 +130,17 @@ def bfs_distances(
     # bucketed-by-src edge table; here localCheckpoint pins it and
     # gives AQE exact sizes for join-side selection per wave.
     edges = edges.select("src", "dst").localCheckpoint()
-    # Seed built JVM-side (range + lit): a createDataFrame seed would
-    # drag a Python pickle stage into every wave's job graph.
-    id_lit = F.lit(source).cast("long") if isinstance(source, int) else F.lit(source)
-    visited = (
-        spark.range(1)
-        .select(id_lit.alias("id"), F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint()
-    )
-    if target is not None and source == target:
+    # dedupe seeds (order-preserving): a duplicate entry would seed
+    # visited twice and silently double every downstream per-seed
+    # aggregate (r6 advice)
+    seeds = list(dict.fromkeys(seeds))
+    t = "string" if seeds and isinstance(seeds[0], str) else "long"
+    visited = local_df(
+        spark, [(s, s, 0) for s in seeds], f"seed {t}, id {t}, dist long"
+    ).localCheckpoint()
+    if target is not None and target in seeds:
         return visited
+    hit = F.col("id") == target if target is not None else F.lit(False)
     frontier = visited
     for depth in range(1, max_depth + 1):
         # No forced broadcast: wave-1 frontiers are tiny (AQE
@@ -129,84 +149,37 @@ def bfs_distances(
         # OOM at scale. AQE picks per-wave using checkpointed stats.
         candidates = (
             frontier.join(edges, frontier.id == edges.src)
-            .select(F.col("dst").alias("id"))
+            .select("seed", F.col("dst").alias("id"))
             .distinct()
         )
-        # ONE job per wave: the frontier-size and target-hit probes are
-        # Observation metrics on the checkpoint job itself (same
-        # pattern as connected_components), not separate count() jobs.
-        obs = Observation()
-        tgt = (
-            (F.col("id") == target).cast("long")
-            if target is not None
-            else F.lit(0).cast("long")
+        new_frontier, got = checkpoint_observed(
+            candidates.join(visited.select("seed", "id"), ["seed", "id"], "left_anti")
+            .withColumn("dist", F.lit(depth).cast("long")),
+            n=F.count(F.lit(1)),
+            hit=F.sum(hit.cast("long")),
         )
-        new_frontier = (
-            candidates.join(visited.select("id"), "id", "left_anti")
-            .withColumn("dist", F.lit(depth))
-            .observe(obs, F.count(F.lit(1)).alias("n"), F.sum(tgt).alias("hit"))
-            .localCheckpoint()  # truncate lineage per wave
-        )
-        got = obs.get
-        if not got.get("n"):
+        if not got["n"]:
             break
         # Lazy union: children are all checkpointed RDDs, so the chain
         # stays shallow and next wave's anti-join reads them directly —
         # no extra materialization job per wave.
         visited = visited.unionByName(new_frontier)
-        if got.get("hit"):
+        if got["hit"]:
             break
         frontier = new_frontier
     return visited
 
 
-def multi_bfs_distances(
-    edges: DataFrame, seeds: list[int], max_depth: int = 100
+def bfs_distances(
+    edges: DataFrame,
+    source: str | int,
+    max_depth: int = 100,
+    target: str | int | None = None,
 ) -> DataFrame:
-    """BFS from ALL ``seeds`` in one wave loop; returns
-    (seed, id, dist) for every (seed → vertex) pair reached within
-    ``max_depth`` edges.
-
-    The scale point vs running :func:`bfs_distances` per seed: K
-    single-source runs pay K× the wave-loop job overhead and scan the
-    edge table K× per depth level; here the frontier is keyed by
-    (seed, id), so ONE join per wave advances every seed's wavefront
-    simultaneously — the standard multi-source BFS batching (the same
-    frontier⋈edges / anti-join-visited shape as the single-source
-    loop, reference main.py:283–303, just with the seed column carried
-    through)."""
-    spark = edges.sparkSession
-    edges = edges.select("src", "dst").localCheckpoint()
-    # dedupe seeds (order-preserving): a duplicate entry would seed
-    # visited twice and silently double every downstream per-seed
-    # aggregate (r6 advice)
-    seeds = list(dict.fromkeys(int(s) for s in seeds))
-    seed_arr = F.array(*[F.lit(s).cast("long") for s in seeds])
-    visited = (
-        spark.range(1)
-        .select(F.explode(seed_arr).alias("seed"))
-        .select("seed", F.col("seed").alias("id"), F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint()
-    )
-    frontier = visited
-    for depth in range(1, max_depth + 1):
-        candidates = (
-            frontier.join(edges, frontier.id == edges.src)
-            .select("seed", F.col("dst").alias("id"))
-            .distinct()
-        )
-        obs = Observation()
-        new_frontier = (
-            candidates.join(visited.select("seed", "id"), ["seed", "id"], "left_anti")
-            .withColumn("dist", F.lit(depth).cast("long"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
-        )
-        if not obs.get.get("n"):
-            break
-        visited = visited.unionByName(new_frontier)
-        frontier = new_frontier
-    return visited
+    """Single-source BFS from ``source``: (id, dist) for every vertex
+    reached within ``max_depth`` edges — the one-seed case of
+    :func:`multi_bfs_distances`."""
+    return multi_bfs_distances(edges, [source], max_depth, target).select("id", "dist")
 
 
 def bfs_query(edges: DataFrame, mol_from: str, mol_to: str, max_depth: int = 100) -> int:
@@ -222,12 +195,20 @@ def bfs_query(edges: DataFrame, mol_from: str, mol_to: str, max_depth: int = 100
     return int(hit.dist) + 1 if hit is not None else -1
 
 
-def pagerank(
-    edges: DataFrame,
-    n_iter: int = 10,
-    damping: float = 0.85,
-    cut_every: int = 2,
-) -> DataFrame:
+#: Lineage-cut cadence of the fixed-round loops (:func:`pagerank`,
+#: :func:`label_propagation`), measured r9: each localCheckpoint is an
+#: EAGER full materialization of the vertex state, and interleaved A/B
+#: of pagerank at sf0.1 (3 reps, results bit-identical across
+#: cadences) measured per-iteration cuts at ~5.4 s, every-2 at ~4.7 s,
+#: every-5 equal to every-2, and NO intermediate cut at 5.4–6.0 s —
+#: unbounded plan depth costs more in optimizer/AQE work than the saved
+#: materializations. Every-2 keeps the lineage bound tight (2 join+agg
+#: rounds) while halving state writes — on a 1000-executor graph that
+#: is half the full-vertex-set I/O.
+CUT_EVERY = 2
+
+
+def pagerank(edges: DataFrame, n_iter: int = 10, damping: float = 0.85) -> DataFrame:
     """PageRank by power iteration over the edge DataFrame — the
     aggregateMessages pattern as joins (analytics-style per
     BASELINE.json: batch job over edges, not OLTP). Returns
@@ -235,16 +216,8 @@ def pagerank(
 
     Scale: each iteration is one join (ranks ⋈ edges, co-partitioned
     on a real cluster via bucketing by src) + one groupBy(dst) with
-    map-side combine. Lineage is cut every ``cut_every`` iterations
-    (r9): each localCheckpoint is an EAGER full materialization of the
-    rank vector, and interleaved A/B at sf0.1 (3 reps, results
-    bit-identical across cadences) measured per-iteration cuts at
-    ~5.4 s, every-2 at ~4.7 s, every-5 equal to every-2, and NO
-    intermediate cut at 5.4–6.0 s — unbounded plan depth costs more in
-    optimizer/AQE work than the saved materializations. Every-2 keeps
-    the lineage bound tight (2 join+agg rounds) while halving rank-
-    vector writes — on a 1000-executor graph that is half the
-    full-vertex-set I/O.
+    map-side combine. Lineage is cut every :data:`CUT_EVERY`
+    iterations.
 
     r15 shape (per-phase decomposition of the r14 operator, guide
     §1.1/§2.4): (1) the vertex relation used by every iteration's
@@ -291,14 +264,12 @@ def pagerank(
             "w",
             (F.lit(1 - damping) + F.lit(damping) * F.coalesce("c", F.lit(0.0))).alias("rank"),
         )
-        if (i + 1) % cut_every == 0 or i == n_iter - 1:
+        if (i + 1) % CUT_EVERY == 0 or i == n_iter - 1:
             ranks = ranks.localCheckpoint()
     return ranks.select("id", "rank")
 
 
-def label_propagation(
-    edges: DataFrame, n_iter: int = 4, cut_every: int = 2
-) -> DataFrame:
+def label_propagation(edges: DataFrame, n_iter: int = 4) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
     et al. 2007), the deterministic fixed-iteration variant GraphFrames
     ships as ``labelPropagation``: labels start as vertex ids; each
@@ -315,8 +286,8 @@ def label_propagation(
     map-side combine + an argmax groupBy — the aggregateMessages shape.
     The vote argmax is ``min_by(label, struct(-count, label))``: no
     per-vertex window, no skew beyond the vertex's own degree. Lineage
-    is cut every ``cut_every`` rounds (the measured pagerank cadence —
-    per-round cuts pay more materialization than they save)."""
+    is cut every :data:`CUT_EVERY` rounds (the measured pagerank
+    cadence)."""
     e = edges.select("src", "dst").localCheckpoint()
     labels = vertices(e).withColumn("label", F.col("id")).localCheckpoint()
     for i in range(n_iter):
@@ -333,7 +304,7 @@ def label_propagation(
         labels = labels.join(winner, "id", "left").select(
             "id", F.coalesce("new_label", "label").alias("label")
         )
-        if (i + 1) % cut_every == 0 or i == n_iter - 1:
+        if (i + 1) % CUT_EVERY == 0 or i == n_iter - 1:
             labels = labels.localCheckpoint()
     return labels
 
@@ -357,18 +328,16 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         # labels branch, and every endpoint has a labels row), so the
         # convergence signal is an Observation metric on the same
         # aggregation that produces the new labels.
-        obs = Observation()
-        prop = (
+        prop, got = checkpoint_observed(
             labels.join(e, labels.id == e.src)
             .select(F.col("dst").alias("id"), "component", F.lit(None).cast(labels.schema["component"].dataType).alias("own"))
             .unionByName(labels.withColumn("own", F.col("component")))
             .groupBy("id")
-            .agg(F.min("component").alias("component"), F.max("own").alias("own"))
-            .observe(obs, F.sum((F.col("component") < F.col("own")).cast("long")).alias("changed"))
-            .localCheckpoint()
+            .agg(F.min("component").alias("component"), F.max("own").alias("own")),
+            changed=F.sum((F.col("component") < F.col("own")).cast("long")),
         )
         labels = prop.select("id", "component")
-        if not obs.get.get("changed"):
+        if not got["changed"]:
             connected_components.last_converged = True
             break
     return labels
@@ -403,17 +372,8 @@ def connected_components_auto(
 
     Diagnostics: ``connected_components_auto.last_strategy`` records
     which path ran ('minlabel' | 'star' | 'minlabel→star')."""
-    obs = Observation()
-    e = (
-        edges.select(
-            F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
-    )
-    if obs.get.get("n") <= small_graph_edges:
+    e, got = checkpoint_observed(_canonical_pairs(edges), n=F.count(F.lit(1)))
+    if got["n"] <= small_graph_edges:
         # min-label's contract is a bidirectional edge table (it
         # propagates src→dst only); symmetrize the canonical view
         sym = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -422,9 +382,23 @@ def connected_components_auto(
             connected_components_auto.last_strategy = "minlabel"
             return labels
         connected_components_auto.last_strategy = "minlabel→star"
-        return connected_components_star(e)
-    connected_components_auto.last_strategy = "star"
-    return connected_components_star(e)
+    else:
+        connected_components_auto.last_strategy = "star"
+    # star rounds run on this checkpoint directly: it is already the
+    # canonical list that connected_components_star would rebuild
+    return _star_rounds(e, vertices(e))
+
+
+def _canonical_pairs(edges: DataFrame) -> DataFrame:
+    """Canonical big→small (src > dst) distinct pairs; self-loops drop
+    out — the undirected edge set both CC strategies start from."""
+    return (
+        edges.select(
+            F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
+        )
+        .filter(F.col("src") != F.col("dst"))
+        .distinct()
+    )
 
 
 def connected_components_star(edges: DataFrame, max_iter: int = 30) -> DataFrame:
@@ -453,16 +427,12 @@ def connected_components_star(edges: DataFrame, max_iter: int = 30) -> DataFrame
     Diagnostics: ``connected_components_star.last_rounds`` holds the
     round count of the most recent call (tests assert the O(log n)
     bound on a planted path graph)."""
-    verts = vertices(edges)
-    # canonical big→small pairs; self-loops drop out
-    e = (
-        edges.select(
-            F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
+    return _star_rounds(_canonical_pairs(edges).localCheckpoint(), vertices(edges), max_iter)
+
+
+def _star_rounds(e: DataFrame, verts: DataFrame, max_iter: int = 30) -> DataFrame:
+    """The star-CC rounds over a checkpointed :func:`_canonical_pairs`
+    list; ``verts`` is the vertex set every label is reported for."""
     prev_fp: tuple = ()
     rounds = 0
     for _ in range(max_iter):
@@ -489,16 +459,14 @@ def connected_components_star(edges: DataFrame, max_iter: int = 30) -> DataFrame
             .unionByName(m_small.select("src", F.col("m").alias("dst")))
             .distinct()
         )
-        obs = Observation()
-        e = ss.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
+        e, got = checkpoint_observed(
+            ss,
+            n=F.count(F.lit(1)),
             # decimal sum: ANSI mode makes a bigint sum of 64-bit hashes
             # throw on overflow; decimal(38,0) absorbs any edge count
-            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("fp"),
-        ).localCheckpoint()
-        got = obs.get
-        fp = (got.get("n"), got.get("fp"))
+            fp=F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")),
+        )
+        fp = (got["n"], got["fp"])
         if fp == prev_fp:
             break
         prev_fp = fp
@@ -547,7 +515,6 @@ def core_numbers(
     core_numbers.last_rounds = 0
     for _ in range(max_iter):
         core_numbers.last_rounds += 1
-        obs = Observation()
         nbr = (
             deg.join(e, deg.id == e.src)
             .select(F.col("dst").alias("id"), F.col("core").alias("nc"))
@@ -560,16 +527,15 @@ def core_numbers(
                 lambda x, i: x >= i + 1,
             )
         )
-        nxt = (
+        nxt, got = checkpoint_observed(
             nbr.groupBy("id")
             .agg(h.alias("h"))
             .join(deg, "id")
-            .select("id", F.least(F.col("core"), F.col("h")).alias("core"), F.col("core").alias("old"))
-            .observe(obs, F.sum((F.col("core") < F.col("old")).cast("long")).alias("changed"))
-            .localCheckpoint()
+            .select("id", F.least(F.col("core"), F.col("h")).alias("core"), F.col("core").alias("old")),
+            changed=F.sum((F.col("core") < F.col("old")).cast("long")),
         )
         deg = nxt.select("id", "core")
-        if not obs.get.get("changed"):
+        if not got["changed"]:
             core_numbers.last_converged = True
             break
     return deg

@@ -70,12 +70,22 @@ MAX_SHINGLE_DF = 1024
 _SEP = "\x1f"
 
 
+def _norm_text() -> Column:
+    """Whitespace-normalized lowercase ``text`` — the one normalization
+    every shingle/MinHash/exact-hash consumer shares."""
+    return F.lower(F.regexp_replace(F.trim(F.col("text")), r"[ \t\n\r\f]+", " "))
+
+
+def _normalize(docs: DataFrame) -> DataFrame:
+    """(doc_id, normalized text, token array) over a documents scan."""
+    norm = _norm_text()
+    return docs.select("doc_id", norm.alias("norm"), F.split(norm, " ").alias("toks"))
+
+
 def _norm_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents + whitespace-normalized lowercase text + token array."""
     tune(spark)
-    docs = load_table(spark, sf_dir, "documents")
-    norm = F.lower(F.regexp_replace(F.trim(F.col("text")), r"[ \t\n\r\f]+", " "))
-    return docs.select("doc_id", norm.alias("norm"), F.split(norm, " ").alias("toks"))
+    return _normalize(load_table(spark, sf_dir, "documents"))
 
 
 def _norm_docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -101,8 +111,7 @@ def _norm_docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if docs.rdd.getNumPartitions() < n_part:
         docs = docs.repartition(n_part)
-    norm = F.lower(F.regexp_replace(F.trim(F.col("text")), r"[ \t\n\r\f]+", " "))
-    return docs.select("doc_id", norm.alias("norm"), F.split(norm, " ").alias("toks"))
+    return _normalize(docs)
 
 
 def _shingles_col(n: int = 3) -> Column:
@@ -1020,8 +1029,7 @@ def dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     basis points — integer-exact in any engine)."""
     tune(spark)
     docs = load_table(spark, sf_dir, "documents")
-    norm = F.lower(F.regexp_replace(F.trim(F.col("text")), r"[ \t\n\r\f]+", " "))
-    hashed = docs.select("source", F.md5(norm).alias("h"))
+    hashed = docs.select("source", F.md5(_norm_text()).alias("h"))
     nn = (
         hashed.filter(F.col("h").isNotNull())
         .groupBy("source", "h")

@@ -347,29 +347,62 @@ def test_core_numbers_part_projection_matches_networkx(spark, sf_dir):
     assert len(got) > 5  # non-degenerate: a genuinely multi-valued histogram
 
 
+def _python_bfs(pairs, seed, max_depth):
+    """Plain-Python reference BFS: {vertex: edge count} from ``seed``."""
+    adj = {}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+    dist, frontier = {seed: 0}, {seed}
+    for depth in range(1, max_depth + 1):
+        frontier = {v for u in frontier for v in adj.get(u, ())} - dist.keys()
+        dist.update(dict.fromkeys(frontier, depth))
+    return dist
+
+
 def test_multi_bfs_matches_per_seed_single_source(spark):
-    # multi-source BFS (one wave loop, frontier keyed by (seed, id))
-    # must agree exactly with K independent single-source runs
+    # the shared wave loop (frontier keyed by (seed, id)) must agree
+    # exactly with an independent plain-Python BFS per seed
     from molgraphdb_spark.operators.graph import bfs_distances, multi_bfs_distances
 
     # path 0-1-2-3-4 plus a disjoint pair 10-11
     pairs = [(0, 1), (1, 2), (2, 3), (3, 4), (10, 11)]
-    e = spark.createDataFrame(
-        pairs + [(b, a) for a, b in pairs], "src long, dst long"
-    )
+    pairs += [(b, a) for a, b in pairs]
+    e = spark.createDataFrame(pairs, "src long, dst long")
     seeds = [0, 2, 10]
     multi = {
         (r.seed, r.id): r.dist
         for r in multi_bfs_distances(e, seeds, max_depth=10).collect()
     }
-    single = {}
-    for s in seeds:
-        for r in bfs_distances(e, s, max_depth=10).collect():
-            single[(s, r.id)] = r.dist
-    assert multi == single
+    want = {(s, v): d for s in seeds for v, d in _python_bfs(pairs, s, 10).items()}
+    assert multi == want
     assert multi[(0, 4)] == 4 and multi[(2, 0)] == 2 and multi[(10, 11)] == 1
     # seed 0 never reaches the disjoint component
     assert (0, 10) not in multi
+    # the single-source entry point is the one-seed case
+    assert {r.id: r.dist for r in bfs_distances(e, 2, max_depth=10).collect()} == (
+        _python_bfs(pairs, 2, 10)
+    )
+
+
+def test_multi_bfs_string_ids_target_early_exit(spark):
+    # string ids (the edit-graph case bfs_query serves): the loop stops
+    # after the wave that reaches ``target``, so every seed's distances
+    # equal the Python BFS cut at the target's depth
+    from molgraphdb_spark.operators.graph import bfs_distances, multi_bfs_distances
+
+    pairs = [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"), ("x", "y")]
+    pairs += [(b, a) for a, b in pairs]
+    e = spark.createDataFrame(pairs, "src string, dst string")
+    got = {
+        (r.seed, r.id): r.dist
+        for r in multi_bfs_distances(e, ["a", "e"], max_depth=10, target="c").collect()
+    }
+    want = {(s, v): d for s in ("a", "e") for v, d in _python_bfs(pairs, s, 2).items()}
+    assert got == want
+    single = {r.id: r.dist for r in bfs_distances(e, "a", target="c").collect()}
+    assert single == {"a": 0, "b": 1, "c": 2}
+    # target == seed: no wave runs
+    assert [tuple(r) for r in bfs_distances(e, "a", target="a").collect()] == [("a", 0)]
 
 
 def test_multi_bfs_duplicate_seeds_not_double_counted(spark):

@@ -3,9 +3,12 @@ the plans/r<N>/<query>_{before,after}.txt deliverable writer.
 
     python tools/qplan.py [sf_dir] [-o OUTDIR] [-s SUFFIX] [-u] query ...
 
-``-u`` (uncut, r15): monkeypatch localCheckpoint to identity so plans
-show the pre-checkpoint pipeline a checkpointed query hides behind
-Scan ExistingRDD. Measurement-only: repeated references to a
+``-u`` (uncut, r15): monkeypatch localCheckpoint to count-then-identity
+so plans show the pre-checkpoint pipeline a checkpointed query hides
+behind Scan ExistingRDD (``-u graph_pagerank_top`` dumps the uncut
+pagerank loop). The count() is the one action an observation-gated
+round needs to fill its Observation; a bare identity stub would leave
+``obs.get`` waiting forever. Measurement-only: repeated references to a
 checkpointed relation then RE-EXPAND in the dumped tree (logically —
 the real execution materializes them once), so uncut dumps evidence
 expression/operator shapes, not execution counts."""
@@ -19,6 +22,25 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from molgraphdb_spark.registry import all_queries
 from molgraphdb_spark.session import get_spark, tune
+
+
+def uncut_local_checkpoint(self, eager=True):
+    """The ``-u`` stub for DataFrame.localCheckpoint: run one action
+    (fills any Observation on the frame), keep the lineage uncut."""
+    self.count()
+    return self
+
+
+def uncut_targets() -> list[type]:
+    """The DataFrame classes ``-u`` patches: Spark 4's runtime instance
+    is the classic subclass, which overrides the abstract parent."""
+    from pyspark.sql import DataFrame
+
+    try:
+        from pyspark.sql.classic.dataframe import DataFrame as _CDF
+    except ImportError:
+        return [DataFrame]
+    return [DataFrame, _CDF]
 
 
 def main() -> int:
@@ -35,15 +57,8 @@ def main() -> int:
         del args[i : i + 2]
     if "-u" in args:
         args.remove("-u")
-        from pyspark.sql import DataFrame
-
-        DataFrame.localCheckpoint = lambda self, eager=True: self  # type: ignore[method-assign]
-        try:  # Spark 4: the runtime instance is the classic subclass
-            from pyspark.sql.classic.dataframe import DataFrame as _CDF
-
-            _CDF.localCheckpoint = lambda self, eager=True: self  # type: ignore[method-assign]
-        except ImportError:
-            pass
+        for cls in uncut_targets():
+            cls.localCheckpoint = uncut_local_checkpoint  # type: ignore[method-assign]
     sf_dir = args.pop(0) if args and os.path.isdir(args[0]) else "/root/testdata/sf0.01"
     spark = get_spark("qplan")
     tune(spark)
